@@ -9,29 +9,27 @@ deterministic via row_number over (score, old_key, new_key) — see
 SURVEY.md §7.4.
 
 Scale notes: the diff is ONE full-outer join on the key (sort-merge
-or broadcast if one snapshot is small); rename detection joins only
-the added×deleted *residual* (tiny relative to the table) through an
-exploded-token equi-join instead of a cross join, so it stays
-shuffle-bounded by the change volume, not the table size.
+or broadcast if one snapshot is small). Rename detection joins only
+the added×deleted *residual* (the day's churn, tiny relative to the
+table), and never through a cross join: one filter-and-verify probe
+join produces every candidate pair. Both residuals are stacked into
+one (side, key, name) frame; each *needle* (every name, plus every
+old-name token) is blocked on its rarest 4-gram on the other side,
+equi-joined to that side's gram table, and verified with
+``contains``. The needles are chosen so the candidates are a superset
+of the pairs the final predicate accepts (see ``detect_renames``), so
+the shuffle stays bounded by the change volume, not the table size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from psx_data_pipeline_spark.functions.textfns import WS_RE
 
-# detect_renames' per-call old/new side caches, session-bounded (each
-# entry is a churn residual — kilobytes). Tracked so the bench's
-# memo-clearing hook can unpersist them; see detect_renames body.
-_SIDE_CACHE: list[DataFrame] = []
-
-
-def clear_rename_side_caches() -> None:
-    for df in _SIDE_CACHE:
-        df.unpersist()
-    _SIDE_CACHE.clear()
+# gram length of the candidate blocking
+B = 4
 
 
 def snapshot_diff(current: DataFrame, previous: DataFrame, key: str) -> DataFrame:
@@ -52,6 +50,43 @@ def snapshot_diff(current: DataFrame, previous: DataFrame, key: str) -> DataFram
     )
 
 
+def _grams(s: Column) -> Column:
+    """Distinct B-char substrings of ``s``; a shorter string is its
+    own only gram (it can never equal a needle's B-char gram)."""
+    idx = F.sequence(F.lit(1), F.greatest(F.length(s) - B + 1, F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: s.substr(i, F.lit(B))))
+
+
+def _short_subs(s: Column) -> Column:
+    """Distinct substrings of every length 0..B-1 of ``s``. A needle
+    shorter than one gram IS its own only "gram", so
+    ``needle == gram`` over this set is exact substring containment
+    expressed as an equi-join. The EMPTY substring is deliberately in
+    the set: `'' in name` is True in Python (the reference's
+    predicate) and contains(name, '') is true in both engines, so an
+    empty-named churn row matches every container (round-10
+    hostile-ticker find; the '' key joins only against empty needles,
+    so the candidate volume stays output-bound). Volume is
+    ~(B-1)·len(name) rows per name of the churn residual."""
+
+    # Capture n via a factory, NEVER `lambda i, n=n:` — PySpark
+    # counts a defaulted parameter as a second lambda argument and
+    # silently switches F.transform to its (element, index) two-arg
+    # form, making the substring LENGTH the array index (round-10
+    # hostile-corpus find; pinned by test_short_name_containment_rename).
+    def _sub_of_len(nn: int):
+        return lambda i: s.substr(i, F.lit(nn))
+
+    gs = F.flatten(F.array(*[
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(s) - n + 1, F.lit(1))),
+            _sub_of_len(n),
+        )
+        for n in range(1, B)
+    ]))
+    return F.array_distinct(F.concat(gs, F.array(F.lit(""))))
+
+
 def detect_renames(
     deleted: DataFrame,
     added: DataFrame,
@@ -70,357 +105,128 @@ def detect_renames(
     token with len>3 appearing as a SUBSTRING of the new name; here
     the token must appear as a whole token in both) — a re-spec for
     determinism and equi-join-ability, documented per SURVEY.md §7.4.
-
     ``parity=True`` switches the third clause to the reference's
-    exact predicate (old-name token as substring of the new name).
-    The candidate path stays an equi-join: each old token is blocked
-    on its rarest 4-gram measured on the new-name side — identical
-    machinery to the containment path, so parity mode scales the
-    same way. (The reference's greedy set-iteration pick is still
-    replaced by the deterministic best-score 1:1 assignment; the
-    PREDICATE is parity, the tie-resolution is deterministic.)
+    exact predicate. (The reference's greedy set-iteration pick is
+    still replaced by the deterministic best-score 1:1 assignment;
+    the PREDICATE is parity, the tie-resolution is deterministic.)
 
-    Instead of the reference's O(|deleted|×|added|) nested loop, both
-    candidate paths are equi-joins:
-      * token path — exploded-token inverted-index join;
-      * containment path — if a ⊆ b then a's first 4 chars occur in
-        b, so block on (first-4-of-contained = some-4-gram-of-
-        container), one join per direction; names shorter than 4
-        chars equi-join whole against the container's 1..3-char
-        substring set (still no nested loop).
+    Candidates come from ONE needle join instead of the reference's
+    O(|deleted|×|added|) nested loop, in both modes. A needle is a
+    string the other side's name must contain:
+      * every old name (old ⊆ new) and every new name (new ⊆ old);
+      * every old-name token with len>min_token_len. In parity mode
+        the third clause IS "token ⊆ new name"; in the default mode
+        a shared whole token is in particular a substring of the new
+        name.
+    Every pair the predicate accepts therefore has a needle contained
+    in its other name, so the candidates are a superset of the
+    matches and the final predicate keeps only the true ones. A
+    needle of ≥B chars is blocked on its RAREST B-gram, frequency
+    measured on the other side (a fixed pick such as the first gram
+    degenerates to all-pairs on shared prefixes like "Customer#…";
+    a gram absent there drops the needle before any join), then
+    equi-joined to the other side's gram table and verified with
+    ``contains``. A needle shorter than one gram equi-joins whole
+    against the other side's 1..B-1-char substring set; that branch
+    exists only when such needles can (``min_name_lens`` — the
+    (deleted, added) minimum name lengths — or one scalar probe job,
+    and ``min_token_len < B - 1``).
+
     1:1 assignment keeps the best pair per old key and per new key
     via two row_number passes ordered by (score desc, old_key,
     new_key) — deterministic where the reference's set iteration was
     not.
 
+    Nothing is cached here; callers own materialization. The stacked
+    ``sides`` frame is read three times (the gram table twice, the
+    needles once; once more for short needles), so the inputs should
+    be cheap to rescan — e.g. the cached churn residuals plans/ticker
+    passes. The short-needle gate observes the inputs once, at
+    plan-construction time: do not pass inputs whose source mutates
+    before the plan executes.
+
     Returns (old_key, new_key, old_name, new_name).
     """
-    # Both inputs are churn residuals (the day's adds/deletes — tiny
-    # at any scale, see module docstring) but each is referenced by
-    # EVERY candidate branch below: grams, rarest-gram frequency,
-    # short-substring residual, token index — ~8 references. Without
-    # materialization each branch re-executes the caller's upstream
-    # plan (snapshot scan + anti-join) per reference, which is where
-    # round 3's 2.5 s → 6.4 s regression came from. cache() rather
-    # than localCheckpoint: it preserves the lineage for the plan
-    # guards and skips localCheckpoint's separate non-AQE RDD
-    # compile (~2× the first-call cost, measured); the entries live
-    # for the session but are bounded by the churn volume —
-    # kilobytes-to-megabytes at any scale, by the same argument as
-    # plans/ticker's change-table memo.
-    old = deleted.select(
-        F.col(key).alias("old_key"), F.lower(F.col(name)).alias("old_name")
-    ).cache()
-    new = added.select(
-        F.col(key).alias("new_key"), F.lower(F.col(name)).alias("new_name")
-    ).cache()
-    # registered so clear_rename_side_caches (called by the bench via
-    # plans.clear_session_memos) can drop them: Spark's cache manager
-    # matches by analyzed plan, so without the unpersist a re-measured
-    # run rebuilding the identical old/new plans would silently reuse
-    # the first run's materialized partitions and under-report cost
-    _SIDE_CACHE.extend((old, new))
+    # side 0 = old (deleted), side 1 = new (added)
+    sides = deleted.select(
+        F.lit(0).alias("side"), F.col(key).alias("key"),
+        F.lower(F.col(name)).alias("name"),
+    ).unionByName(added.select(
+        F.lit(1).alias("side"), F.col(key).alias("key"),
+        F.lower(F.col(name)).alias("name"),
+    ))
 
-    def keyed_tokens(df: DataFrame, side: str) -> DataFrame:
-        toks = F.filter(
-            F.split(F.col(f"{side}_name"), WS_RE),
-            lambda w: F.length(w) > min_token_len,
-        )
-        return df.select(f"{side}_key", f"{side}_name", F.explode(toks).alias("tok"))
+    def words(s: Column) -> Column:
+        return F.filter(F.split(s, WS_RE), lambda w: F.length(w) > min_token_len)
 
-    cols = ["old_key", "old_name", "new_key", "new_name"]
-    # substring-containment candidates can lack shared tokens (e.g.
-    # concatenations). A naive theta-join is a nested-loop over the
-    # full added×deleted sets — a scale-killer on a big churn day —
-    # so block each direction on 4-char grams: a container contains
-    # EVERY gram of the contained string, so it suffices to join on
-    # ONE gram of the contained side. Which one matters enormously:
-    # a fixed choice (e.g. the first gram) degenerates to all-pairs
-    # when names share a common prefix ("Customer#…", "Pak …"), so
-    # each contained name is blocked on its RAREST gram — rarity
-    # measured by the gram's frequency on the container side, making
-    # the candidate count per name the frequency of its most
-    # selective gram instead of its least. Grams absent from the
-    # container side have frequency 0 ⇒ the name cannot be contained
-    # anywhere and drops out before any join.
-    B = 4
-
-    def grams(df: DataFrame, side: str) -> DataFrame:
-        name = F.col(f"{side}_name")
-        idx = F.sequence(F.lit(1), F.greatest(F.length(name) - B + 1, F.lit(1)))
-        g = F.transform(idx, lambda i: name.substr(i, F.lit(B)))
-        return df.select(
-            f"{side}_key", f"{side}_name",
-            F.explode(F.array_distinct(g)).alias("gram"),
+    def containers(subs) -> DataFrame:
+        # labelled with the side whose needles probe them, so every
+        # join below is on (side, gram) and never matches a name
+        # against its own side
+        return sides.select(
+            (1 - F.col("side")).alias("side"),
+            F.col("key").alias("ckey"), F.col("name").alias("cname"),
+            F.explode(subs(F.col("name"))).alias("gram"),
         )
 
-    def rarest_gram(contained: DataFrame, side: str, freq: DataFrame) -> DataFrame:
-        """One row per contained name, carrying its globally rarest
-        gram (ties broken on the gram string for determinism).
-
-        The argmin is a map-side-combinable ``min_by`` over
-        (gfreq, gram) — same pick as a sort + row_number window
-        (lexicographic struct order == the (gfreq asc, gram asc)
-        sort) at one partial-aggregated shuffle instead of a full
-        per-key sort stage. ``freq`` is the container side's cached
-        per-gram frequency table (built once below — round 12: parity
-        mode used to aggregate the new-side gram frequencies twice,
-        once here and once for the token path)."""
-        g = grams(contained.where(F.length(f"{side}_name") >= B), side)
-        scored = g.join(freq, "gram", "left").withColumn(
-            "gfreq", F.coalesce("gfreq", F.lit(0))
-        )
-        best = scored.groupBy(f"{side}_key").agg(
-            F.min_by(
-                F.struct(
-                    "gram", f"{side}_name", F.col("gfreq").alias("gfreq")
-                ),
-                F.struct("gfreq", "gram"),
-            ).alias("__b")
-        )
-        return best.where(F.col("__b.gfreq") > 0).select(
-            f"{side}_key",
-            F.col(f"__b.{side}_name").alias(f"{side}_name"),
-            F.col("__b.gram").alias("gram"),
-        )
-
-    def short_grams(df: DataFrame, side: str) -> DataFrame:
-        """Distinct substrings of every length 0..B-1 of a container
-        name. A contained string shorter than one gram (< B chars) IS
-        its own only "gram", so `short_name == gram` over this set is
-        exact substring containment expressed as an equi-join — no
-        nested loop even for the short-name residual. The EMPTY
-        substring is deliberately in the set: `'' in name` is True in
-        Python (the reference's predicate) and contains(name, '') is
-        true in both engines, so an empty-named churn row matches
-        every container — without the '' gram the blocking silently
-        dropped exactly that value (round-10 hostile-ticker find; the
-        '' key is hot across containers but joins only against
-        empty-named rows, so the candidate volume stays output-bound,
-        the same count the complete-enumeration oracle produces).
-        Volume is ~(B-1)·len(name) rows per container row, and rename
-        detection runs on the churn-bounded added/deleted residual,
-        so the explode is trivial at any scale."""
-        name = F.col(f"{side}_name")
-
-        # Capture n via a factory, NEVER `lambda i, n=n:` — PySpark
-        # counts a defaulted parameter as a second lambda argument
-        # and silently switches F.transform to its (element, index)
-        # two-arg form, making the substring LENGTH the array index
-        # (round-10 hostile-corpus find: 'hbl ltd' produced
-        # ['', 'b', 'l ', ...] and short-name containment matched
-        # nothing; pinned by test_short_name_containment_rename).
-        def _sub_of_len(nn: int):
-            return lambda i: name.substr(i, F.lit(nn))
-
-        gs = F.flatten(
-            F.array(
-                *[
-                    F.transform(
-                        F.sequence(
-                            F.lit(1), F.greatest(F.length(name) - n + 1, F.lit(1))
-                        ),
-                        _sub_of_len(n),
-                    )
-                    for n in range(1, B)
-                ]
-            )
-        )
-        return df.select(
-            f"{side}_key", f"{side}_name",
-            F.explode(
-                F.array_distinct(F.concat(gs, F.array(F.lit(""))))
-            ).alias("gram"),
-        )
-
-    # Gram tables and their per-gram frequency aggregates are each
-    # referenced by 2-3 candidate branches (containment join + rarest-
-    # gram frequency per direction, + the parity token path on the new
-    # side). All four frames are churn-bounded like old/new themselves,
-    # so cache them once instead of re-exploding / re-aggregating the
-    # same subtree per branch (round 12, guide §2.4 — the stage census
-    # read 90-129 stages on the rename consumers, mostly duplicated
-    # gram subtrees); registered in _SIDE_CACHE for the bench's
-    # memo-clearing hook exactly like old/new.
-    new_grams = grams(new, "new").cache()
-    old_grams = grams(old, "old").cache()
-    freq_new = new_grams.groupBy("gram").agg(
-        F.count(F.lit(1)).alias("gfreq")
-    ).cache()
-    freq_old = old_grams.groupBy("gram").agg(
-        F.count(F.lit(1)).alias("gfreq")
-    ).cache()
-    _SIDE_CACHE.extend((new_grams, old_grams, freq_new, freq_old))
-
-    # Short-name residual pruning: names shorter than one gram need
-    # the 1..B-1-substring equi-join fallback, but almost every real
-    # churn set has none (ticker/company names are longer than 4
-    # chars). The minimum name length per side decides whether those
-    # branches exist at all, so the dead branches, their unions, and
-    # their whole-stage-codegen compile cost drop out of the main
-    # query. Callers that already materialized the residuals (the
-    # plans-layer churn cache piggybacks a min(length(name)) on the
-    # same job) pass ``min_name_lens=(deleted_min, added_min)``;
-    # otherwise ONE scalar job (a documented scalar-only action, like
-    # the CC convergence check) probes both sides here.
-    #
-    # STATIC-INPUT ASSUMPTION: the branch gating observes the inputs
-    # once, at plan-construction time. Both sides are cache()d above,
-    # so the frames this probe saw are the frames the plan executes
-    # against; callers must not pass inputs whose underlying source
-    # mutates between construction and execution (re-call
-    # detect_renames after a source change instead).
-    if min_name_lens is not None:
-        min_o, min_n = min_name_lens
-    else:
-        probe = (
-            old.select(
-                F.length("old_name").alias("len_o"),
-                F.lit(None).cast("int").alias("len_n"),
-            )
-            .unionByName(
-                new.select(
-                    F.lit(None).cast("int").alias("len_o"),
-                    F.length("new_name").alias("len_n"),
-                )
-            )
-            .agg(F.min("len_o").alias("o"), F.min("len_n").alias("n"))
-            .first()
-        )
-        min_o, min_n = probe["o"], probe["n"]
-    has_short_old = min_o is not None and min_o < B
-    has_short_new = min_n is not None and min_n < B
-
-    # Candidate multiplicity note (round 12): the candidate union is
-    # deliberately NOT distinct-ed, and the per-branch distincts are
-    # gone too. A pair surfaced k times (several shared tokens, both
-    # containment directions, token+containment overlap) yields k
-    # bit-identical candidate rows; the r_old row_number picks exactly
-    # one row per old_key and ties among identical twins are value-
-    # identical, so the final (old,new) assignment is unchanged —
-    # while each removed distinct was a full exchange + hash-aggregate
-    # of the candidate set (guide §2.4: a distinct on data whose
-    # consumer already collapses it). k is bounded by the token count
-    # of a name plus 3, so the window shuffle grows by a small
-    # constant, not a blow-up.
-    if not parity:
-        # inverted-index candidates: share a significant whole token
-        cand_tok = (
-            keyed_tokens(old, "old")
-            .join(keyed_tokens(new, "new"), "tok")
-            .select(*cols)
-        )
-    else:
-        # reference third clause: an old-name token (len>min_token_len)
-        # appearing as a SUBSTRING of the new name. Same blocking idea
-        # as the containment path — the token is the contained string,
-        # so block it on its rarest 4-gram measured on the new-name
-        # side; a token absent from every new name (gfreq 0) drops out
-        # before the join.
-        tok_src = old.select(
-            "old_key", "old_name",
-            F.explode(F.array_distinct(F.filter(
-                F.split(F.col("old_name"), WS_RE),
-                lambda w: F.length(w) > min_token_len,
-            ))).alias("tok"),
-        )
-        nfreq = freq_new
-        tok_grams = tok_src.where(F.length("tok") >= B).select(
-            "old_key", "old_name", "tok",
-            F.explode(F.array_distinct(F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("tok") - B + 1, F.lit(1))
-                ),
-                lambda i: F.col("tok").substr(i, F.lit(B)),
-            ))).alias("gram"),
-        )
-        tok_rarest = (
-            tok_grams.join(nfreq, "gram", "left")
-            .withColumn("gfreq", F.coalesce("gfreq", F.lit(0)))
-            .groupBy("old_key", "tok")
-            .agg(
-                F.min_by(
-                    F.struct(
-                        "gram", "old_name", F.col("gfreq").alias("gfreq")
-                    ),
-                    F.struct("gfreq", "gram"),
-                ).alias("__b")
-            )
-            .where(F.col("__b.gfreq") > 0)
-            .select(
-                "old_key",
-                F.col("__b.old_name").alias("old_name"),
-                "tok",
-                F.col("__b.gram").alias("gram"),
-            )
-        )
-        cand_tok = (
-            tok_rarest.join(new_grams, "gram")
-            .where(F.col("new_name").contains(F.col("tok")))
-            .select(*cols)
-        )
-        # tokens shorter than one gram — possible only when
-        # min_token_len < B-1 (tokens are filtered to len >
-        # min_token_len, so with the defaults every token is already
-        # gram-sized and this branch is statically empty)
-        if min_token_len < B - 1:
-            short_toks = tok_src.where(F.length("tok") < B)
-            cand_tok = cand_tok.unionByName(
-                short_toks.withColumn("gram", F.col("tok"))
-                .join(short_grams(new, "new"), "gram")
-                .select(*cols)
-            )
-    old_in_new = (
-        rarest_gram(old, "old", freq_new)
-        .join(new_grams, "gram")
-        .where(F.col("new_name").contains(F.col("old_name")))
-        .select(*cols)
+    grams = containers(_grams)
+    freq = grams.groupBy("side", "gram").agg(F.count(F.lit(1)).alias("gfreq"))
+    needles = sides.select(
+        "side", "key", "name",
+        F.explode(
+            F.when(
+                F.col("side") == 0,
+                F.array_distinct(F.concat(F.array("name"), words(F.col("name")))),
+            ).otherwise(F.array("name"))
+        ).alias("needle"),
     )
-    new_in_old = (
-        rarest_gram(new, "new", freq_old)
-        .join(old_grams, "gram")
-        .where(F.col("old_name").contains(F.col("new_name")))
-        .select(*cols)
+    # min over the (gfreq, gram) struct is the argmin: struct order is
+    # lexicographic, so ties on frequency break on the gram string
+    rarest = (
+        needles.where(F.length("needle") >= B)
+        .select("*", F.explode(_grams(F.col("needle"))).alias("gram"))
+        .join(freq, ["side", "gram"], "left")
+        .groupBy("side", "key", "name", "needle")
+        .agg(F.min(F.struct(
+            F.coalesce("gfreq", F.lit(0)).alias("gfreq"), "gram"
+        )).alias("r"))
+        .where(F.col("r.gfreq") > 0)
+        .select("side", "key", "name", "needle", F.col("r.gram").alias("gram"))
     )
-    # residual: contained side shorter than one gram — the whole
-    # short name equi-joins against the other side's short-substring
-    # set (exact containment, no nested loop). Built only when the
-    # probe above found short names on that side.
-    cand = cand_tok.unionByName(old_in_new).unionByName(new_in_old)
-    if has_short_old:
-        cand = cand.unionByName(
-            old.where(F.length("old_name") < B)
-            .withColumn("gram", F.col("old_name"))
-            .join(short_grams(new, "new"), "gram")
-            .select(*cols)
+    hits = rarest.join(grams, ["side", "gram"]).where(
+        F.col("cname").contains(F.col("needle"))
+    )
+    hit_cols = ["side", "key", "name", "ckey", "cname"]
+    lens = min_name_lens
+    if lens is None:
+        lens = (sides.agg(F.min(F.length("name"))).first()[0],)
+    if min_token_len < B - 1 or any(n is not None and n < B for n in lens):
+        hits = hits.select(hit_cols).unionByName(
+            needles.where(F.length("needle") < B)
+            .withColumnRenamed("needle", "gram")
+            .join(containers(_short_subs), ["side", "gram"])
+            .select(hit_cols)
         )
-    if has_short_new:
-        cand = cand.unionByName(
-            new.where(F.length("new_name") < B)
-            .withColumn("gram", F.col("new_name"))
-            .join(short_grams(old, "old"), "gram")
-            .select(*cols)
-        )
+    # A pair found by several needles yields value-identical candidate
+    # rows; the r_old row_number keeps one, so no distinct is needed.
+    is_old = F.col("side") == 0
+    cand = hits.select(
+        F.when(is_old, F.col("key")).otherwise(F.col("ckey")).alias("old_key"),
+        F.when(is_old, F.col("name")).otherwise(F.col("cname")).alias("old_name"),
+        F.when(is_old, F.col("ckey")).otherwise(F.col("key")).alias("new_key"),
+        F.when(is_old, F.col("cname")).otherwise(F.col("name")).alias("new_name"),
+    )
+
     contains = F.col("new_name").contains(F.col("old_name")) | F.col(
         "old_name"
     ).contains(F.col("new_name"))
     token_hit = (F.length("old_name") > 10) & (F.length("new_name") > 10)
-    old_toks = F.filter(
-        F.split(F.col("old_name"), WS_RE), lambda w: F.length(w) > min_token_len
-    )
+    old_toks = words(F.col("old_name"))
     if parity:
         # reference: count old tokens appearing anywhere in new_name
         shared = F.size(F.filter(old_toks, lambda w: F.col("new_name").contains(w)))
     else:
-        shared = F.size(
-            F.array_intersect(
-                old_toks,
-                F.filter(
-                    F.split(F.col("new_name"), WS_RE),
-                    lambda w: F.length(w) > min_token_len,
-                ),
-            )
-        )
+        shared = F.size(F.array_intersect(old_toks, words(F.col("new_name"))))
     matched = cand.where(contains | (token_hit & (shared > 0))).withColumn(
         "score", F.when(contains, F.lit(2)).otherwise(F.lit(1)) * (1 + shared)
     )

@@ -47,7 +47,7 @@ from psx_data_pipeline_spark.sources.fixtures import load_table_parallel
 _K = 16  # signature length — matches minhash_lsh_pairs
 
 # q_minhash_calibration's session-bounded working-frame caches (the
-# detect_renames _SIDE_CACHE pattern): the dup-collapse frame, the
+# plans/ticker session-memo pattern): the dup-collapse frame, the
 # signature table and the exploded shingle table are each referenced
 # by SEVERAL execution-time consumers below, and before round 13 they
 # were unpersisted at PLAN-CONSTRUCTION time — the round-12 plan
@@ -221,6 +221,6 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tables serve all (round-12 plan dump, `minhash_calibration`).
     # They now stay persisted for the session, registered in
     # _CALIB_CACHE; clear_session_memos unpersists them before any
-    # re-measurement, exactly like detect_renames' _SIDE_CACHE.
+    # re-measurement, exactly like the plans/ticker memos.
     _CALIB_CACHE.extend((grouped, sig, sh, sizes))
     return out

@@ -42,7 +42,7 @@ from psx_data_pipeline_spark.sources.fixtures import load_table_parallel
 _TOKS = TOKENS_SQL.format("text")
 
 # dup_span_fraction's session-bounded dup-table caches (the
-# detect_renames _SIDE_CACHE pattern): both tables are bounded by the
+# plans/ticker session-memo pattern): both tables are bounded by the
 # TRUE cross-document duplicate set, not the corpus; registered so
 # plans.clear_session_memos can unpersist them before a
 # re-measurement (dup_span_fraction is a MEMO_OWNER).

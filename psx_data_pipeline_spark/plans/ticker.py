@@ -143,12 +143,15 @@ SELECT old_key, new_key, old_name, new_name FROM r2 WHERE r_new = 1
 # queries (both rename variants + the sync pipeline) start from the
 # same subtree, and the frames are churn-bounded — the day's
 # adds/deletes, kilobytes at any scale — so one shared cache beats
-# three rebuilds. Both residuals come out of ONE cached full-outer
-# join (one shuffle; the two separate anti-joins each re-shuffled
-# both snapshots — twice the exchange volume at any scale), and the
-# materializing job doubles as a stats probe: min(length(name)) per
-# side rides along so detect_renames can gate its short-name
-# branches without running its own probe job.
+# three rebuilds. It is also the materialization detect_renames
+# leaves to its caller: the rename plan rescans its inputs three
+# times, each an in-memory scan of this cache. Both residuals come
+# out of ONE cached full-outer join (one shuffle; the two separate
+# anti-joins each re-shuffled both snapshots — twice the exchange
+# volume at any scale), and the materializing job doubles as a stats
+# probe: min(length(name)) per side rides along so detect_renames
+# can gate its short-needle branch without running its own probe
+# job.
 _RESIDUAL_CACHE: dict[
     tuple[str, str],
     tuple[DataFrame, DataFrame, tuple[int | None, int | None], DataFrame],
@@ -157,16 +160,16 @@ _RESIDUAL_CACHE: dict[
 
 def _churn_residuals(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, tuple[int | None, int | None]]:
-    """(added, deleted, (deleted_min_name_len, added_min_name_len)),
-    cached per app + sf_dir. The min-length pair feeds
-    detect_renames(min_name_lens=...); None = side is empty. The memo
-    additionally holds the cached parent frame so
-    clear_session_memos() can unpersist it."""
+) -> tuple[DataFrame, DataFrame, tuple[int | None, int | None], DataFrame]:
+    """(added, deleted, (deleted_min_name_len, added_min_name_len),
+    resid), cached per app + sf_dir. The min-length pair feeds
+    detect_renames(min_name_lens=...); None = side is empty. ``resid``
+    is the cached parent frame (struct columns ``c`` / ``p``, one
+    null), which clear_session_memos() unpersists."""
     memo_key = (spark.sparkContext.applicationId, sf_dir)
     hit = _RESIDUAL_CACHE.get(memo_key)
     if hit is not None:
-        return hit[0], hit[1], hit[2]
+        return hit
     cur, prev = _cur(spark, sf_dir), _prev(spark, sf_dir)
     j = cur.select(F.struct(*cur.columns).alias("c")).join(
         prev.select(F.struct(*prev.columns).alias("p")),
@@ -190,7 +193,7 @@ def _churn_residuals(
     ).first()
     lens = (stats["min_deleted"], stats["min_added"])
     _RESIDUAL_CACHE[memo_key] = (added, deleted, lens, resid)
-    return added, deleted, lens
+    return added, deleted, lens, resid
 
 
 # Parity variant: the reference's EXACT third clause — any old-name
@@ -266,10 +269,6 @@ def clear_session_memos() -> None:
     Unpersist matters as much as the dict clear — Spark's cache
     manager matches by analyzed plan, so a rebuilt identical plan
     would silently reuse the old materialized partitions."""
-    from psx_data_pipeline_spark.operators.diff import (
-        clear_rename_side_caches,
-    )
-
     for _, _, _, resid in _RESIDUAL_CACHE.values():
         resid.unpersist()
     _RESIDUAL_CACHE.clear()
@@ -279,10 +278,6 @@ def clear_session_memos() -> None:
     for df in _RENAME_CACHE.values():
         df.unpersist()
     _RENAME_CACHE.clear()
-    # detect_renames' internal old/new caches would otherwise be
-    # silently re-served to the rebuilt identical plans of a
-    # re-measured run (cache matching is by analyzed plan)
-    clear_rename_side_caches()
     # the memoized ANN top-k result tables (plans/similarity) — same
     # benchmark-honesty contract as the sync-change memo above
     from psx_data_pipeline_spark.plans.similarity import _TOPK_CACHE
@@ -303,7 +298,7 @@ def clear_session_memos() -> None:
     _CENTS_CACHE.clear()
     # minhash_calibration's session-persisted working frames
     # (plans/estimators._CALIB_CACHE) — same re-measurement honesty
-    # contract as the rename side caches above
+    # contract as the ticker memos above
     from psx_data_pipeline_spark.plans.estimators import (
         clear_calibration_caches,
     )
@@ -327,13 +322,13 @@ _SYNC_CHANGE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 # The rename table itself, keyed (app, sf_dir, parity): the sync
 # pipeline and `rename_detection` build the IDENTICAL non-parity
-# detect_renames DAG over the same cached residuals — the gram/token
-# subtrees the residual memo doesn't cover (round-9 judge ask #5).
-# Sharing it the way _churn_residuals shares the diff means the view
-# measures warm (plan cost belongs to the owning sync stage — the
-# change_log_format precedent) instead of re-running ~10 stages of
-# candidate generation. Churn-bounded like everything here: the
-# cached table is the day's renames, kilobytes at any scale.
+# detect_renames DAG over the same cached residuals — the probe join
+# (gram table, rarest-gram aggregate, verify, 1:1 assignment) the
+# residual memo doesn't cover. Sharing it the way _churn_residuals
+# shares the diff means the view measures warm (plan cost belongs to
+# the owning sync stage — the change_log_format precedent) instead of
+# re-running candidate generation. Churn-bounded like everything
+# here: the cached table is the day's renames, kilobytes at any scale.
 _RENAME_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
 
 
@@ -347,7 +342,7 @@ def _rename_table(
     hit = _RENAME_CACHE.get(memo_key)
     if hit is not None:
         return hit
-    added, deleted, lens = _churn_residuals(spark, sf_dir)
+    added, deleted, lens, _ = _churn_residuals(spark, sf_dir)
     ren = detect_renames(
         deleted, added, key="symbol_id", name="name",
         parity=parity, min_name_lens=lens,
@@ -362,9 +357,11 @@ def q_ticker_sync_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff two snapshots, promote fuzzy-matched (deleted, added) pairs
     to RENAMED, emit the typed change log (SURVEY.md §1.1).
 
-    The result is materialized once per (application, sf_dir) via an
-    eager localCheckpoint and shared with `change_log_format`; the
-    intermediate caches are released as soon as the checkpoint exists.
+    The result is materialized once per (application, sf_dir) by
+    ``cache()`` + an eager ``count()`` and shared with
+    `change_log_format`. The churn residuals and the rename table it
+    is built from stay cached too: all three are session memos that
+    clear_session_memos() releases together.
     """
     memo_key = (spark.sparkContext.applicationId, sf_dir)
     hit = _SYNC_CHANGE_CACHE.get(memo_key)
@@ -375,56 +372,49 @@ def q_ticker_sync_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # diff's ADDED/DELETED rows select), so the sync pipeline starts
     # from the same cached frames as the two rename queries instead
     # of rebuilding the diff subtree
-    added, deleted, lens = _churn_residuals(spark, sf_dir)
-    added_keys = added.select("symbol_id")
-    deleted_keys = deleted.select("symbol_id")
-    # The rename table is referenced three times below (RENAMED rows +
-    # two anti-joins) AND is the whole plan of the rename_detection
-    # view. It is bounded by the daily churn (tiny relative to the
+    *_, resid = _churn_residuals(spark, sf_dir)
+    in_cur = F.col("p").isNull()
+    churn = resid.select(
+        F.when(in_cur, F.lit("ADDED")).otherwise(F.lit("DELETED"))
+        .alias("change_type"),
+        F.coalesce("c.symbol_id", "p.symbol_id").alias("symbol_id"),
+    )
+    # The rename table is referenced twice below (RENAMED rows + the
+    # anti-join) AND is the whole plan of the rename_detection view.
+    # It is bounded by the daily churn (tiny relative to the
     # snapshot), so the session memo materializes it once — at any
-    # scale this is kilobytes, and AQE then broadcasts the anti-joins.
+    # scale this is kilobytes, and AQE then broadcasts the anti-join.
     ren = _rename_table(spark, sf_dir, parity=False)
     renamed = ren.select(
         F.lit("RENAMED").alias("change_type"),
         F.col("old_key").alias("old_symbol_id"),
         F.col("new_key").alias("new_symbol_id"),
     )
-    pure_added = (
-        added_keys.join(
-            ren.select(F.col("new_key").alias("symbol_id")), "symbol_id", "left_anti"
-        )
-        .select(
-            F.lit("ADDED").alias("change_type"),
-            F.lit(None).cast("long").alias("old_symbol_id"),
-            F.col("symbol_id").alias("new_symbol_id"),
-        )
-    )
-    pure_deleted = (
-        deleted_keys.join(
-            ren.select(F.col("old_key").alias("symbol_id")), "symbol_id", "left_anti"
-        )
-        .select(
-            F.lit("DELETED").alias("change_type"),
-            F.col("symbol_id").alias("old_symbol_id"),
-            F.lit(None).cast("long").alias("new_symbol_id"),
-        )
-    )
+    # one anti-join drops both keys of every pair: each rename is
+    # exploded to its (DELETED, old_key) and (ADDED, new_key) rows
+    ren_keys = ren.select(F.explode(F.array(
+        F.struct(F.lit("DELETED").alias("change_type"),
+                 F.col("old_key").alias("symbol_id")),
+        F.struct(F.lit("ADDED").alias("change_type"),
+                 F.col("new_key").alias("symbol_id")),
+    )).alias("k")).select("k.*")
+    unmatched = churn.join(ren_keys, ["change_type", "symbol_id"], "left_anti")
+    is_added = F.col("change_type") == "ADDED"
     out = (
-        renamed.unionByName(pure_added)
-        .unionByName(pure_deleted)
+        renamed.unionByName(unmatched.select(
+            "change_type",
+            F.when(~is_added, F.col("symbol_id")).alias("old_symbol_id"),
+            F.when(is_added, F.col("symbol_id")).alias("new_symbol_id"),
+        ))
         # eager materialization via cache + count, NOT localCheckpoint:
         # localCheckpoint compiles a second, non-AQE physical plan for
-        # the whole sync DAG (~2× the first-call cost — the same
-        # measurement that moved detect_renames to cache(), see
-        # operators/diff.py). The cache entry lives for the session but
-        # is churn-bounded (the day's adds/deletes/renames, kilobytes
-        # at any scale), the same argument as the residual cache.
+        # the whole sync DAG (~2× the first-call cost, measured). The
+        # cache entry lives for the session but is churn-bounded (the
+        # day's adds/deletes/renames, kilobytes at any scale), the
+        # same argument as the residual cache.
         .cache()
     )
     out.count()
-    # the shared churn residuals AND the rename table stay cached:
-    # both are session memos with registered consumers (the rename
-    # views); clear_session_memos releases everything together
     _SYNC_CHANGE_CACHE[memo_key] = out
     return out
 

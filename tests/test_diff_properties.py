@@ -9,10 +9,13 @@ satisfied by accident.
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from psx_data_pipeline_spark.functions.textfns import WS_RE
 from psx_data_pipeline_spark.operators.diff import detect_renames, snapshot_diff
 
 SCHEMA = "symbol STRING, name STRING"
@@ -131,3 +134,90 @@ def test_short_name_containment_rename(spark):
     added2 = spark.createDataFrame([(105, "XYZ")], "symbol_id long, name string")
     got2 = detect_renames(deleted2, added2, key="symbol_id", name="name").collect()
     assert [(r.old_key, r.new_key) for r in got2] == [(5, 105)]
+
+
+# --- candidate completeness: detect_renames == brute-force predicate --------
+
+
+def _brute_renames(deleted, added, parity, min_token_len=3):
+    """The whole rename pipeline in plain Python over ALL pairs: the
+    predicate, the score and both row_number passes of detect_renames,
+    so any pair the candidate probe loses shows up as a difference."""
+
+    def toks(s):
+        return [w for w in re.split(WS_RE, s) if len(w) > min_token_len]
+
+    matched = []
+    for ok, on in deleted:
+        for nk, nn in added:
+            on_l, nn_l = on.lower(), nn.lower()
+            contains = on_l in nn_l or nn_l in on_l
+            if parity:
+                shared = sum(1 for w in toks(on_l) if w in nn_l)
+            else:
+                shared = len(set(toks(on_l)) & set(toks(nn_l)))
+            if contains or (len(on_l) > 10 and len(nn_l) > 10 and shared > 0):
+                matched.append((ok, nk, (2 if contains else 1) * (1 + shared)))
+    best_old = {}
+    for ok, nk, sc in sorted(matched, key=lambda m: (-m[2], m[1])):
+        best_old.setdefault(ok, (ok, nk, sc))
+    best_new = {}
+    for ok, nk, sc in sorted(best_old.values(), key=lambda m: (-m[2], m[0])):
+        best_new.setdefault(nk, (ok, nk))
+    return sorted(best_new.values())
+
+
+def _check_complete(spark, deleted, added, **kw):
+    """detect_renames' pairs per mode, asserted equal to the brute force."""
+    schema = "symbol_id long, name string"
+    d, a = spark.createDataFrame(deleted, schema), spark.createDataFrame(added, schema)
+    out = {}
+    for parity in (False, True):
+        got = detect_renames(
+            d, a, key="symbol_id", name="name", parity=parity, **kw
+        ).collect()
+        out[parity] = sorted((r.old_key, r.new_key) for r in got)
+        assert len(set(out[parity])) == len(got)
+        assert out[parity] == _brute_renames(deleted, added, parity, **kw), parity
+    return out
+
+
+def test_shared_token_pair_found_when_its_grams_are_common(spark):
+    """Neither name contains the other, so only the old-name TOKEN
+    needle can find the pair. Every 4-gram of 'cement' ('ceme',
+    'emen', 'ment') is frequent on the new side, so its rarest gram
+    still has many candidates; the verify must keep the right one."""
+    deleted = [(1, "Maple Leaf Cement Factory")]
+    added = [
+        (11, "Kohat Cement Company"),
+        (12, "Cemetery Trust Holdings"),
+        (13, "Clemency Mentors Group"),
+        (14, "Mentor Cemetery Mills"),
+        (15, "Vehement Moment Traders"),
+    ]
+    got = _check_complete(spark, deleted, added)
+    assert got == {False: [(1, 11)], True: [(1, 11)]}
+
+
+def test_single_word_old_name_gives_one_assignment(spark):
+    """A one-word old name is both a name needle and a token needle
+    (the same string): the duplicate candidate must not duplicate
+    the assignment."""
+    deleted = [(1, "Habibmetropolitan")]
+    added = [
+        (12, "The Habibmetropolitan Group"),
+        (11, "Habibmetropolitan Bank"),
+    ]
+    got = _check_complete(spark, deleted, added)
+    assert got == {False: [(1, 11)], True: [(1, 11)]}
+
+
+def test_short_shared_tokens_with_min_token_len_1(spark):
+    """min_token_len=1 admits 2-3-char tokens, shorter than one gram,
+    so they go through the short-needle substring join. (1, 11) share
+    the whole token 'ab'; (2, 12) share 'cd' only inside the new
+    word 'xcdx' — a parity-only match."""
+    deleted = [(1, "ab qrs efghijk"), (2, "cd mnopqrstu")]
+    added = [(11, "zz ab vwyzuvw"), (12, "xcdx lmlmlml")]
+    got = _check_complete(spark, deleted, added, min_token_len=1)
+    assert got == {False: [(1, 11)], True: [(1, 11), (2, 12)]}

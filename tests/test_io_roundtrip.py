@@ -190,7 +190,7 @@ def test_empty_name_rename_matches_reference_semantics(spark):
     gram, so an empty-named deleted row matched NOTHING while the
     complete-enumeration oracle matched it to the lowest added key.
     The container substring set now includes '' (operators/diff.py
-    short_grams)."""
+    _short_subs)."""
     from psx_data_pipeline_spark.operators.diff import detect_renames
 
     deleted = spark.createDataFrame([(9, "")], "symbol_id long, name string")

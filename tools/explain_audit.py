@@ -26,8 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # default pointer to their SCALE_SUMMARY row.
 HEADLINERS = [
     ("pricing_summary", "scan pushdown + partial aggregation"),
-    ("ticker_sync_changes", "full sync pipeline: anti-joins + blocked rename join"),
-    ("rename_detection", "gram-blocked containment join (no nested loop)"),
+    ("ticker_sync_changes", "full sync pipeline: one anti-join + one rarest-gram probe join"),
+    ("rename_detection", "rarest-gram needle probe join (no nested loop)"),
     ("scd1_merge", "SCD-1 conditional merge as left join + when-chains"),
     ("ohlc_daily", "date-bucketed aggregation"),
     ("moving_avg", "per-key ordered window"),
