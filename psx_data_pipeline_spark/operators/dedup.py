@@ -30,6 +30,7 @@ from psx_data_pipeline_spark.functions.hashing import (
     minhash_perms,
 )
 from psx_data_pipeline_spark.functions.textfns import tokens, word_shingles
+from psx_data_pipeline_spark.session import hold
 
 
 def _dup_collapse(df: DataFrame, text_col: str, id_col: str):
@@ -40,7 +41,7 @@ def _dup_collapse(df: DataFrame, text_col: str, id_col: str):
     telling us nothing — their pairs are known in advance — and
     duplicate-heavy corpora are precisely what dedup operators see.
     Returns (grouped, reps, members): grouped is the persisted
-    working frame (caller must unpersist after materializing),
+    working frame (the caller releases or holds it),
     reps has one (id, __txt) row per distinct text (the min-id
     member, via ONE fingerprint window), members maps every id to
     its representative."""
@@ -55,19 +56,37 @@ def _dup_collapse(df: DataFrame, text_col: str, id_col: str):
     return grouped, reps, members
 
 
-def _expand_dup_pairs(
+def _near_dup_pairs(
     rep_pairs: DataFrame,
     members: DataFrame,
-    value_cols: list[str],
     intra_values: dict[str, Column],
+    *working: DataFrame,
 ) -> DataFrame:
-    """Expand representative-level pairs back to document ids.
+    """The near-dup operators' shared epilogue: expand
+    representative-level pairs (rep_a, rep_b, *intra_values) back to
+    document ids and release the caller's persisted ``working``
+    frames.
+
+    It checkpoints the expansion's INPUTS (qualifying rep pairs +
+    id->rep map), not the expanded output: the persisted subtrees
+    release immediately, while the (potentially huge, output-bound)
+    expansion stays a lazy plan — eagerly caching it as deserialized
+    rows measured 70 s of GC thrash at a 30x-duplicated corpus.
+    rep_pairs is output-bound (small); members is O(corpus) ROWS — but
+    only 2 longs (~16 B) per row, held as executor-distributed RDD
+    blocks, never on the driver. The checkpoints exist to truncate
+    lineage so the working frames can unpersist, at the standard
+    localCheckpoint cost: blocks are not recomputable, so an executor
+    loss fails the job instead of recomputing. Both are held until
+    clear_session_memos, because the returned plan reads them.
 
     Intra-group pairs (identical texts) get the known ``intra_values``
     (e.g. jaccard 1.0, hamming 0); cross-group pairs inherit the
     representatives' values — member texts ARE the reps' texts.
     Output-bound by construction: the expansion joins are on the
     (tiny) rep keys and emit exactly the final pairs."""
+    rep_pairs = hold(rep_pairs.localCheckpoint(eager=True))
+    members = hold(members.localCheckpoint(eager=True))
     intra = (
         members.select(F.col("id").alias("id_a"), F.col("rep").alias("g"))
         .join(
@@ -92,10 +111,13 @@ def _expand_dup_pairs(
         .select(
             F.least("ida", "idb").alias("id_a"),
             F.greatest("ida", "idb").alias("id_b"),
-            *value_cols,
+            *intra_values,
         )
     )
-    return intra.unionByName(cross)
+    out = intra.unionByName(cross)
+    for df in working:
+        df.unpersist()
+    return out
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -242,26 +264,8 @@ def minhash_lsh_pairs(
         .where(F.col("rep_a") < F.col("rep_b"))
         .select("rep_a", "rep_b")
         .distinct()
-        # checkpoint the expansion's INPUTS (qualifying rep pairs +
-        # id->rep map), not the expanded output: the persisted
-        # subtrees release immediately, while the (potentially huge,
-        # output-bound) expansion stays a lazy plan — eagerly caching
-        # it as deserialized rows measured 70 s of GC thrash at a
-        # 30x-duplicated corpus. rep_pairs is output-bound (small);
-        # members is O(corpus) ROWS — but only 2 longs (~16 B) per
-        # row, held as executor-distributed RDD blocks, never on the
-        # driver. The checkpoint exists to truncate lineage so the
-        # band/group subtrees can unpersist, at the standard
-        # localCheckpoint cost: blocks are not recomputable, so an
-        # executor loss fails the job instead of recomputing (same
-        # trade as the phash/jaccard twins below).
-        .localCheckpoint(eager=True)
     )
-    members_ck = members.localCheckpoint(eager=True)  # O(corpus)x16B, see above
-    out = _expand_dup_pairs(rep_pairs, members_ck, [], {})
-    band_sig.unpersist()
-    grouped.unpersist()
-    return out
+    return _near_dup_pairs(rep_pairs, members, {}, band_sig, grouped)
 
 
 # --- SimHash ----------------------------------------------------------------
@@ -364,16 +368,9 @@ def simhash_near_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("rep_a", "rep_b", "hamming")
     )
-    rep_pairs = rep_pairs.localCheckpoint(eager=True)  # output-bound (small)
-    # O(corpus) rows x 2 longs, executor-distributed (see minhash note)
-    members_ck = members.localCheckpoint(eager=True)
-    out = _expand_dup_pairs(
-        rep_pairs, members_ck, ["hamming"],
-        {"hamming": F.lit(0)},
-    )  # lazy expansion over checkpointed inputs (see minhash note)
-    blk.unpersist()
-    grouped.unpersist()
-    return out
+    return _near_dup_pairs(
+        rep_pairs, members, {"hamming": F.lit(0)}, blk, grouped
+    )
 
 
 # --- n-gram Jaccard -----------------------------------------------------------
@@ -529,18 +526,10 @@ def ngram_jaccard_pairs(
             "jaccard",
         )
     )
-    # intra-group pairs are Jaccard 1.0 by identity; cross pairs
-    # inherit the representatives' score (see _expand_dup_pairs)
-    rep_pairs = rep_pairs.localCheckpoint(eager=True)  # output-bound (small)
-    # O(corpus) rows x 2 longs, executor-distributed (see minhash note)
-    members_ck = members.localCheckpoint(eager=True)
-    out = _expand_dup_pairs(
-        rep_pairs, members_ck, ["jaccard"], {"jaccard": F.lit(1.0)}
-    )  # lazy expansion over checkpointed inputs (see minhash note)
-    base.unpersist()
-    prefix.unpersist()
-    grouped.unpersist()
-    return out
+    # intra-group pairs are Jaccard 1.0 by identity
+    return _near_dup_pairs(
+        rep_pairs, members, {"jaccard": F.lit(1.0)}, base, prefix, grouped
+    )
 
 
 # --- near-dup clustering (connected components) ------------------------------
@@ -562,7 +551,8 @@ def connected_components(
     aggregation — fully distributed; the driver only checks the
     changed-row count. Rounds needed = graph diameter (near-dup
     clusters are shallow). localCheckpoint truncates the growing
-    lineage so round N doesn't replay rounds 1..N-1.
+    lineage so round N doesn't replay rounds 1..N-1; every round's
+    checkpoint is held until clear_session_memos.
 
     Only EDGE-TOUCHED nodes iterate: a node with no edge can never
     change its label, so carrying the whole corpus through every
@@ -593,7 +583,7 @@ def connected_components(
         )
     ).persist()
     all_ids = nodes.select(F.col(id_col).alias("id"))
-    lbl = (
+    lbl = hold(
         bi.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("__mnd"))
         .select(
@@ -629,7 +619,7 @@ def connected_components(
         # checkpoint blocks (localCheckpoint materializes on first
         # use), and count the changed rows in the same pass; the next
         # round reads the persisted blocks exactly as before.
-        new = (
+        new = hold(
             msgs.unionByName(own)
             .groupBy("id")
             .agg(
@@ -658,98 +648,4 @@ def connected_components(
     # broadcasts this join against the full corpus
     return all_ids.join(lbl, "id", "left").select(
         "id", F.coalesce("comp", F.col("id")).alias("comp")
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    edge rewriting (the published MapReduce CC algorithm): each round
-    hooks every node to the minimum of its neighborhood, so component
-    trees flatten in O(log n) rounds regardless of graph DIAMETER —
-    the label-propagation sibling (`connected_components`) needs
-    diameter rounds, which a long chain turns into n. Fixpoint is a
-    star forest: every node points straight at its component's
-    minimum id.
-
-    Per round: two groupBy-min + two joins, all equi; the driver-side
-    convergence check is one scalar signature (count + hash sum) per
-    round instead of label propagation's changed-count — and there
-    are only O(log n) rounds to check. Returns (id, comp); isolated
-    nodes map to themselves. Output is identical to
-    `connected_components` (property-tested).
-    """
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("src"), F.least("a", "b").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    for _ in range(max_iter):
-        # large-star: every strictly-larger neighbor of u hooks to
-        # min(Γ(u) ∪ {u}); output edges strictly decrease, so no
-        # self-loops by construction
-        bi = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        mins = bi.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        ls = (
-            bi.join(mins, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-        # small-star: per node u (edges directed big→small), every
-        # smaller neighbor and u itself hook to min(N(u) ∪ {u})
-        mins2 = ls.groupBy("src").agg(F.min("dst").alias("m"))
-        ss = (
-            ls.join(mins2, "src")
-            .where(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(mins2.select("src", F.col("m").alias("dst")))
-            .distinct()
-        )
-        # LAZY checkpoint: the signature agg below materializes the
-        # round's edge set and persists it as the checkpoint blocks in
-        # the SAME job — the eager form paid a separate checkpoint job
-        # per round before the agg scanned it (round-12, guide §1.2)
-        new_e = ss.localCheckpoint(eager=False)
-        # set signature: count + XOR of per-edge hashes (edges are
-        # distinct, so XOR is order-independent and cannot overflow)
-        row = new_e.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        sig = (row["c"], row["h"])
-        e = new_e
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds — max_iter is far above the O(log n) bound, so "
-            "this indicates a bug, not a deep graph"
-        )
-    comp = e.groupBy("src").agg(F.min("dst").alias("comp")).withColumnRenamed(
-        "src", "id"
-    )
-    return (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(comp, "id", "left")
-        .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
     )

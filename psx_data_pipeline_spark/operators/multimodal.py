@@ -443,11 +443,12 @@ def phash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     LOSSLESS pigeonhole equi-join on (band_idx, band_value) — 4 bands
     > max_hamming 3 ⇒ any qualifying pair shares a band — and
     verification is the exact 64-bit Hamming distance via per-band
-    bit_count(xor). The rep-pair set and the id→rep map are small and
-    checkpointed; the final expansion is output-bound and lazy."""
+    bit_count(xor). The rep-pair set and the id→rep map are
+    checkpointed and the final expansion is output-bound and lazy (the
+    shared epilogue, operators/dedup._near_dup_pairs)."""
     from pyspark.sql import Window  # noqa: PLC0415 — keep module header lean
     from psx_data_pipeline_spark.operators.dedup import (  # noqa: PLC0415
-        _expand_dup_pairs,
+        _near_dup_pairs,
     )
 
     bcols = ["b0", "b1", "b2", "b3"]
@@ -485,21 +486,10 @@ def phash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
         .withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
         .select("rep_a", "rep_b", "hamming")
-        .localCheckpoint(eager=True)  # output-bound: qualifying rep pairs
     )
-    # NOT small: one row per document id (2 longs, ~16 B/row) — held
-    # as executor-distributed RDD blocks, never on the driver. The
-    # checkpoint truncates lineage so the decode/group subtrees can
-    # unpersist; cost is the standard localCheckpoint trade (blocks
-    # not recomputable on executor loss). Same shape as the minhash
-    # twin (operators/dedup.py minhash_lsh_pairs note).
-    members_ck = members.localCheckpoint(eager=True)
-    out = _expand_dup_pairs(
-        rep_pairs, members_ck, ["hamming"],
-        {"hamming": F.lit(0).cast("long")},
+    return _near_dup_pairs(
+        rep_pairs, members, {"hamming": F.lit(0).cast("long")}, grouped
     )
-    grouped.unpersist()
-    return out
 
 
 def encode_wav(sample_rate: int, samples) -> bytes:

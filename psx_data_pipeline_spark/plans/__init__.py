@@ -57,10 +57,10 @@ from psx_data_pipeline_spark.plans import tpch_classics  # noqa: F401,E402
 from psx_data_pipeline_spark.plans import tpch_final  # noqa: F401,E402
 from psx_data_pipeline_spark.plans import drift  # noqa: F401,E402
 
-# Benchmark hook: drops plan-layer memos (and their Spark cache
-# entries) so a memoized query's re-run measures the plan, not the
-# memo. Extend here if another plan module grows a session memo.
-from psx_data_pipeline_spark.plans.ticker import clear_session_memos  # noqa: F401,E402
+# Benchmark hook: releases every session memo and held frame (the
+# registry in psx_data_pipeline_spark.session) so a memoized query's
+# re-run measures the plan, not the memo.
+from psx_data_pipeline_spark.session import clear_session_memos  # noqa: F401,E402
 
 # Memo ownership — the single declaration bench.py and
 # tools/scale_summary.py read. OWNERS build a session memo as part of
@@ -74,9 +74,9 @@ from psx_data_pipeline_spark.plans.ticker import clear_session_memos  # noqa: F4
 MEMO_OWNERS = frozenset({
     "ticker_sync_changes", "cosine_topk", "ivf_topk", "pq_adc_topk",
     "kmeans_topics", "rename_detection_parity",
-    # round 13: their working frames (_CALIB_CACHE / _SPAN_CACHE)
-    # persist for the session, so a re-measurement must drop them
-    "minhash_calibration", "dup_span_fraction",
+    # their working frames are held for the session (session.hold),
+    # so a re-measurement must drop them
+    "minhash_calibration", "dup_span_fraction", "vocab_overlap_sketch",
 })
 MEMO_CONSUMERS = frozenset({
     "change_log_format", "ann_recall", "pq_recall", "semdedup",

@@ -29,8 +29,6 @@ a centroid).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +37,7 @@ from psx_data_pipeline_spark.operators.similarity import (
     indexable_embedding_sql,
 )
 from psx_data_pipeline_spark.plans.registry import query
+from psx_data_pipeline_spark.session import memo
 from psx_data_pipeline_spark.sources.fixtures import load_table
 
 _DIM = 64
@@ -117,36 +116,14 @@ FROM c{_ITERS} c LEFT JOIN stats st ON c.cid = st.cid
 # re-quantizing 4× (3 unrolled rounds + final assignment) — and,
 # because each round's centroids embed the prior rounds' full-corpus
 # aggregates in their lineage, ~8× without it. MEMORY_AND_DISK so a
-# 100 TB corpus spills instead of OOMing; cleared (and unpersisted)
-# by plans.clear_session_memos for benchmark honesty. Bounded LRU:
-# a session sweeping many sf_dirs (tests build dozens of tmp-path
-# fixtures) must not accumulate one persisted corpus per dir in
-# executor storage, so inserting past the cap unpersists and evicts
-# the oldest entry — the 1×/10× rehearsal pair is the widest
-# legitimate working set.
-_QUANT_CACHE: dict[tuple[str, str], DataFrame] = {}
-_QUANT_CACHE_MAX = 2
-# Serializes the insert/evict section only (the expensive persist +
-# count happens outside it). Without the lock, two threads of the
-# parallel oracle sweep can both observe a miss, both build, and the
-# second's plain dict insert would overwrite the first's entry
-# without unpersisting it — a persisted DataFrame unreachable by
-# both eviction and clear_session_memos (round-8 advice find).
-_QUANT_LOCK = threading.Lock()
-
-
+# 100 TB corpus spills instead of OOMing; a session memo, released
+# by plans.clear_session_memos.
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QUANT_CACHE.get(key)
-    if hit is not None:
-        # Deliberately NO recency refresh on hit: a pop-then-reinsert
-        # opens a window where a concurrent caller (the parallel
-        # oracle sweeps run consumers on a thread pool) sees a miss,
-        # rebuilds and re-persists the corpus, and the losing
-        # DataFrame is orphaned — persisted but unreachable by both
-        # eviction and clear_session_memos (round-8 review find).
-        # FIFO eviction is fine at a cap of 2.
-        return hit
+    return memo(("quantized", spark.sparkContext.applicationId, sf_dir),
+                lambda: _build_quantized(spark, sf_dir))
+
+
+def _build_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     emb = load_table(spark, "embeddings", sf_dir).where(
@@ -166,28 +143,12 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counter: no shuffle, unique per evaluation, and the only
     # property consumed is uniqueness (retrieval-family precedent,
     # plans/retrieval.py).
-    hit = emb.select(
+    qdf = emb.select(
         F.monotonically_increasing_id().alias("rid"),
         "vec_id", q.alias("q"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    hit.count()
-    # a concurrent miss may have built and inserted while this thread
-    # materialized: under the lock, keep the registered one and
-    # release ours, so no persisted DataFrame ever leaves the dict
-    # unpersisted (a lock-free re-check still left a window where
-    # both builders observed None and the second insert orphaned the
-    # first entry)
-    with _QUANT_LOCK:
-        raced = _QUANT_CACHE.get(key)
-        if raced is None:
-            while len(_QUANT_CACHE) >= _QUANT_CACHE_MAX:
-                oldest = next(iter(_QUANT_CACHE))
-                _QUANT_CACHE.pop(oldest).unpersist()
-            _QUANT_CACHE[key] = hit
-    if raced is not None:
-        hit.unpersist()
-        return raced
-    return hit
+    qdf.count()
+    return qdf
 
 
 def _dist(q: Column, c: Column) -> Column:
@@ -273,11 +234,7 @@ def _cents_df(spark: SparkSession, cents: list[tuple[int, list[int]]]) -> DataFr
 # Fitted centroids, one per (application, sf_dir): kmeans_topics and
 # semdedup both consume the same 3-round fit; the memo holds the
 # K final (cid, centroid) tuples as plain Python ints — kilobytes,
-# no Spark-side storage. Cleared by plans.clear_session_memos (the
-# dict drop suffices).
-_CENTS_CACHE: dict[tuple[str, str], list] = {}
-
-
+# no Spark-side storage. Cleared by plans.clear_session_memos.
 def fit_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
     """The K (cid, centroid) pairs after the 3 unrolled rounds.
 
@@ -303,10 +260,11 @@ def fit_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]
     in Python (collect_list order is nondeterministic; q arrays are
     64 non-NULL int64s by the indexable_embedding gate, so Python
     list comparison == Spark's equal-length array ordering)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CENTS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return memo(("centroids", spark.sparkContext.applicationId, sf_dir),
+                lambda: _fit(spark, sf_dir))
+
+
+def _fit(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
     qdf = _quantized(spark, sf_dir)
     # seed ordering is total over (vec_id, q): under a duplicate-id
     # twin inside the seed window, vec_id alone ties and the seed
@@ -344,7 +302,6 @@ def fit_centroids(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]
         # an empty cluster keeps its previous centroid (the former
         # LEFT JOIN carry, now a dict fallback — same K rows)
         cents = [(cid, got.get(cid, c)) for cid, c in cents]
-    _CENTS_CACHE[key] = cents
     return cents
 
 

@@ -42,28 +42,10 @@ from psx_data_pipeline_spark.plans.dedup import (
     _SHINGLES,
 )
 from psx_data_pipeline_spark.plans.registry import query
+from psx_data_pipeline_spark.session import hold
 from psx_data_pipeline_spark.sources.fixtures import load_table_parallel
 
 _K = 16  # signature length — matches minhash_lsh_pairs
-
-# q_minhash_calibration's session-bounded working-frame caches (the
-# plans/ticker session-memo pattern): the dup-collapse frame, the
-# signature table and the exploded shingle table are each referenced
-# by SEVERAL execution-time consumers below, and before round 13 they
-# were unpersisted at PLAN-CONSTRUCTION time — the round-12 plan
-# capture shows the scan+window+shingle/signature machinery rebuilt
-# 6x at execution (6 parquet scans, zero reuse). Registered here so
-# plans.clear_session_memos can unpersist them before any
-# re-measurement (bench lists minhash_calibration as a MEMO_OWNER);
-# memory is bounded by the distinct-text corpus at MEMORY_AND_DISK,
-# the same budget the kmeans _QUANT_CACHE already documents.
-_CALIB_CACHE: list[DataFrame] = []
-
-
-def clear_calibration_caches() -> None:
-    for df in _CALIB_CACHE:
-        df.unpersist()
-    _CALIB_CACHE.clear()
 
 MINHASH_CALIBRATION_ORACLE = f"""
 WITH reps AS (
@@ -219,8 +201,10 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins) and the shingle subtree 4x (sizes x2 + inter's two
     # sides): 6 full scan+window+aggregate passes where two cached
     # tables serve all (round-12 plan dump, `minhash_calibration`).
-    # They now stay persisted for the session, registered in
-    # _CALIB_CACHE; clear_session_memos unpersists them before any
-    # re-measurement, exactly like the plans/ticker memos.
-    _CALIB_CACHE.extend((grouped, sig, sh, sizes))
+    # They are held for the session instead, with the pairs checkpoint
+    # the plan also reads; memory is bounded by the distinct-text
+    # corpus, and clear_session_memos releases them before any
+    # re-measurement (minhash_calibration is a MEMO_OWNER).
+    for df in (grouped, sig, pairs, sh, sizes):
+        hold(df)
     return out

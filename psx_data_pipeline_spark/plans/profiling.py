@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from psx_data_pipeline_spark.plans.registry import query
+from psx_data_pipeline_spark.session import hold
 from psx_data_pipeline_spark.sources.fixtures import load_table
 
 # --- join-key skew audit -------------------------------------------------------
@@ -204,7 +205,7 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     vc = docs.groupBy(
         "source", F.col("n_chars").cast("long").alias("v")
     ).agg(F.count(F.lit(1)).alias("c"))
-    vc = vc.localCheckpoint()  # shared by both paths
+    vc = hold(vc.localCheckpoint())  # shared by both paths
 
     def pct(df: DataFrame, vcol: str, vexpr: str, names: list[str]) -> DataFrame:
         w_cum = (

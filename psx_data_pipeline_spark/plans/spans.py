@@ -37,22 +37,10 @@ from pyspark.sql import functions as F
 
 from psx_data_pipeline_spark.functions.textfns import TOKENS_SQL, tokens, word_shingles
 from psx_data_pipeline_spark.plans.registry import query
+from psx_data_pipeline_spark.session import hold
 from psx_data_pipeline_spark.sources.fixtures import load_table_parallel
 
 _TOKS = TOKENS_SQL.format("text")
-
-# dup_span_fraction's session-bounded dup-table caches (the
-# plans/ticker session-memo pattern): both tables are bounded by the
-# TRUE cross-document duplicate set, not the corpus; registered so
-# plans.clear_session_memos can unpersist them before a
-# re-measurement (dup_span_fraction is a MEMO_OWNER).
-_SPAN_CACHE: list[DataFrame] = []
-
-
-def clear_span_caches() -> None:
-    for df in _SPAN_CACHE:
-        df.unpersist()
-    _SPAN_CACHE.clear()
 
 
 # --- duplicated-span fraction ------------------------------------------------
@@ -148,9 +136,9 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the second reference reads the cached partitions instead of
     # re-deriving the shingle subtree. cand_h is read by shc's two
     # consumers (the dup build and cov); dup by cov. Both are bounded
-    # by the true cross-doc duplicate residue. Session registry +
-    # memo-owner clearing keep re-measurement honest.
-    cand_h = (
+    # by the true cross-doc duplicate residue, and held until the next
+    # clear_session_memos (dup_span_fraction is a MEMO_OWNER).
+    cand_h = hold(
         sh.groupBy("h")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
         .where(F.col("mn") != F.col("mx"))
@@ -159,14 +147,13 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shc = sh.join(cand_h, "h", "left_semi")
     # (2) exact verify on the candidate residue only
-    dup = (
+    dup = hold(
         shc.groupBy("shingle")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
         .where(F.col("mn") != F.col("mx"))
         .select("shingle")
         .persist()
     )
-    _SPAN_CACHE.extend((cand_h, dup))
     # (3) covered positions, de-overlapped per doc
     cov = (
         shc.join(dup, "shingle", "left_semi")

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from psx_data_pipeline_spark.functions.hashing import HASH_P, md5_long, md5_long_sql
 from psx_data_pipeline_spark.functions.textfns import TOKENS_SQL, tokens
 from psx_data_pipeline_spark.plans.registry import query
+from psx_data_pipeline_spark.session import hold
 from psx_data_pipeline_spark.sources.fixtures import load_table, load_table_parallel
 
 _TOKS = TOKENS_SQL.format("text")
@@ -1772,8 +1773,9 @@ def q_vocab_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # registers are tiny (<= 256 rows/source) but feed three
     # consumers (per-source estimates, the pair list, the union
-    # merge) — cache so the token scan runs once
-    regs = regs.cache()
+    # merge) — cache so the token scan runs once; held until the next
+    # clear, so bench's re-run (a MEMO_OWNER) cannot read it
+    regs = hold(regs.cache())
     es = (
         regs.groupBy("source").agg(*_hll_z_agg())
         .select("source", _hll_est_col().alias("est"))

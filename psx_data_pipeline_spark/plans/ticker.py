@@ -25,6 +25,7 @@ from psx_data_pipeline_spark.operators.diff import detect_renames, snapshot_diff
 from psx_data_pipeline_spark.operators.merge import scd1_merge
 from psx_data_pipeline_spark.operators.sessions import latest_per_key
 from psx_data_pipeline_spark.plans.registry import query
+from psx_data_pipeline_spark.session import hold, memo
 from psx_data_pipeline_spark.sources.fixtures import load_table
 
 # --- derived snapshot fixtures (identical in Spark + SQL) -------------------
@@ -152,24 +153,19 @@ SELECT old_key, new_key, old_name, new_name FROM r2 WHERE r_new = 1
 # probe: min(length(name)) per side rides along so detect_renames
 # can gate its short-needle branch without running its own probe
 # job.
-_RESIDUAL_CACHE: dict[
-    tuple[str, str],
-    tuple[DataFrame, DataFrame, tuple[int | None, int | None], DataFrame],
-] = {}
-
-
 def _churn_residuals(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, tuple[int | None, int | None], DataFrame]:
     """(added, deleted, (deleted_min_name_len, added_min_name_len),
-    resid), cached per app + sf_dir. The min-length pair feeds
+    resid), a session memo per app + sf_dir. The min-length pair feeds
     detect_renames(min_name_lens=...); None = side is empty. ``resid``
-    is the cached parent frame (struct columns ``c`` / ``p``, one
-    null), which clear_session_memos() unpersists."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _RESIDUAL_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
+    is the held cached parent frame (struct columns ``c`` / ``p``, one
+    null)."""
+    return memo(("churn_residuals", spark.sparkContext.applicationId, sf_dir),
+                lambda: _build_churn_residuals(spark, sf_dir))
+
+
+def _build_churn_residuals(spark: SparkSession, sf_dir: str):
     cur, prev = _cur(spark, sf_dir), _prev(spark, sf_dir)
     j = cur.select(F.struct(*cur.columns).alias("c")).join(
         prev.select(F.struct(*prev.columns).alias("p")),
@@ -180,7 +176,7 @@ def _churn_residuals(
     # residual-bounded, not snapshot-bounded — caching the whole join
     # would hold (and make every downstream reference rescan) the full
     # snapshot instead of the day's kilobytes of churn
-    resid = j.where(F.col("c").isNull() | F.col("p").isNull()).cache()
+    resid = hold(j.where(F.col("c").isNull() | F.col("p").isNull()).cache())
     added = resid.where(F.col("p").isNull()).select("c.*")
     deleted = resid.where(F.col("c").isNull()).select("p.*")
     stats = resid.agg(
@@ -192,7 +188,6 @@ def _churn_residuals(
         ).alias("min_added"),
     ).first()
     lens = (stats["min_deleted"], stats["min_added"])
-    _RESIDUAL_CACHE[memo_key] = (added, deleted, lens, resid)
     return added, deleted, lens, resid
 
 
@@ -259,67 +254,6 @@ WHERE change_type = 'DELETED'
 """
 
 
-def clear_session_memos() -> None:
-    """Drop the plan-layer memos AND their Spark-side cache entries.
-
-    For benchmarking only: a memoized query's re-run would otherwise
-    measure the memo hit instead of the plan, making it the only
-    registered query whose recorded time keeps its one-time JIT cost
-    (every other >2 s query gets min-of-two with warm codegen).
-    Unpersist matters as much as the dict clear — Spark's cache
-    manager matches by analyzed plan, so a rebuilt identical plan
-    would silently reuse the old materialized partitions."""
-    for _, _, _, resid in _RESIDUAL_CACHE.values():
-        resid.unpersist()
-    _RESIDUAL_CACHE.clear()
-    for df in _SYNC_CHANGE_CACHE.values():
-        df.unpersist()
-    _SYNC_CHANGE_CACHE.clear()
-    for df in _RENAME_CACHE.values():
-        df.unpersist()
-    _RENAME_CACHE.clear()
-    # the memoized ANN top-k result tables (plans/similarity) — same
-    # benchmark-honesty contract as the sync-change memo above
-    from psx_data_pipeline_spark.plans.similarity import _TOPK_CACHE
-
-    for df in _TOPK_CACHE.values():
-        df.unpersist()
-    _TOPK_CACHE.clear()
-    # kmeans' persisted quantized training input + the fitted K-row
-    # centroid memo (plans/clustering)
-    from psx_data_pipeline_spark.plans.clustering import (
-        _CENTS_CACHE,
-        _QUANT_CACHE,
-    )
-
-    for df in _QUANT_CACHE.values():
-        df.unpersist()
-    _QUANT_CACHE.clear()
-    _CENTS_CACHE.clear()
-    # minhash_calibration's session-persisted working frames
-    # (plans/estimators._CALIB_CACHE) — same re-measurement honesty
-    # contract as the ticker memos above
-    from psx_data_pipeline_spark.plans.estimators import (
-        clear_calibration_caches,
-    )
-
-    clear_calibration_caches()
-    # dup_span_fraction's dup-bounded table caches (plans/spans)
-    from psx_data_pipeline_spark.plans.spans import clear_span_caches
-
-    clear_span_caches()
-
-
-# The materialized change table, one per (application, sf_dir). The
-# sync pipeline has two registered consumers (the typed table and the
-# formatted change-log view); without this memo the formatter would
-# re-execute the whole diff + rename-detection DAG. The table is
-# churn-bounded (tiny at any scale — it is the day's adds/deletes/
-# renames, not the snapshot), so holding the materialized result for
-# the session lifetime costs kilobytes and saves the most expensive
-# subtree in the pipeline from running twice.
-_SYNC_CHANGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # The rename table itself, keyed (app, sf_dir, parity): the sync
 # pipeline and `rename_detection` build the IDENTICAL non-parity
 # detect_renames DAG over the same cached residuals — the probe join
@@ -329,26 +263,22 @@ _SYNC_CHANGE_CACHE: dict[tuple[str, str], DataFrame] = {}
 # the owning sync stage — the change_log_format precedent) instead of
 # re-running candidate generation. Churn-bounded like everything
 # here: the cached table is the day's renames, kilobytes at any scale.
-_RENAME_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
 
 
 def _rename_table(
     spark: SparkSession, sf_dir: str, parity: bool
 ) -> DataFrame:
-    """detect_renames over the shared churn residuals, memoized per
-    (application, sf_dir, parity) and kept Spark-cached for the
-    session (clear_session_memos releases it)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, parity)
-    hit = _RENAME_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
-    added, deleted, lens, _ = _churn_residuals(spark, sf_dir)
-    ren = detect_renames(
-        deleted, added, key="symbol_id", name="name",
-        parity=parity, min_name_lens=lens,
-    ).cache()
-    _RENAME_CACHE[memo_key] = ren
-    return ren
+    """detect_renames over the shared churn residuals, a session memo
+    per (application, sf_dir, parity) kept Spark-cached."""
+    def build() -> DataFrame:
+        added, deleted, lens, _ = _churn_residuals(spark, sf_dir)
+        return detect_renames(
+            deleted, added, key="symbol_id", name="name",
+            parity=parity, min_name_lens=lens,
+        ).cache()
+
+    return memo(("rename_table", spark.sparkContext.applicationId, sf_dir,
+                 parity), build)
 
 
 @query("ticker_sync_changes", TICKER_SYNC_ORACLE)
@@ -363,10 +293,19 @@ def q_ticker_sync_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     is built from stay cached too: all three are session memos that
     clear_session_memos() releases together.
     """
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SYNC_CHANGE_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
+    return memo(("sync_changes", spark.sparkContext.applicationId, sf_dir),
+                lambda: _sync_changes(spark, sf_dir))
+
+
+# The materialized change table, one per (application, sf_dir). The
+# sync pipeline has two registered consumers (the typed table and the
+# formatted change-log view); without this memo the formatter would
+# re-execute the whole diff + rename-detection DAG. The table is
+# churn-bounded (tiny at any scale — it is the day's adds/deletes/
+# renames, not the snapshot), so holding the materialized result for
+# the session lifetime costs kilobytes and saves the most expensive
+# subtree in the pipeline from running twice.
+def _sync_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ADDED/DELETED legs ARE the shared churn residuals (added =
     # cur ∖ prev, deleted = prev ∖ cur — exactly what the full-outer
     # diff's ADDED/DELETED rows select), so the sync pipeline starts
@@ -415,7 +354,6 @@ def q_ticker_sync_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     out.count()
-    _SYNC_CHANGE_CACHE[memo_key] = out
     return out
 
 

@@ -1,34 +1,24 @@
-"""Equivalence of the two connected-components strategies.
-
-`connected_components` (min-label propagation, rounds = diameter) and
-`connected_components_star` (large-star/small-star, rounds = O(log n))
-must produce identical (id, comp) labelings on any graph. The star
-variant's reason to exist is the long-chain case — label propagation
-needs ~n rounds there, the star method a handful.
+"""`connected_components` (min-label propagation, rounds = diameter)
+against a union-find ground truth: the (id, comp) labeling must match
+on a long chain (the label-propagation worst case), on random graphs
+with self-loops and duplicate edges, and with isolated nodes.
 """
 
 from __future__ import annotations
 
 import random
 
-import pytest
-
-from psx_data_pipeline_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
+from psx_data_pipeline_spark.operators.dedup import connected_components
 
 
 def _labels(df):
     return {(r.id, r.comp) for r in df.collect()}
 
 
-def _both(spark, edge_list, n_nodes, max_iter_lp=60):
+def _lp(spark, edge_list, n_nodes, max_iter=60):
     edges = spark.createDataFrame(edge_list, "id_a long, id_b long")
     nodes = spark.range(n_nodes).withColumnRenamed("id", "id")
-    lp = connected_components(edges, nodes, max_iter=max_iter_lp)
-    star = connected_components_star(edges, nodes)
-    return _labels(lp), _labels(star)
+    return _labels(connected_components(edges, nodes, max_iter=max_iter))
 
 
 def _brute(edge_list, n_nodes):
@@ -55,13 +45,9 @@ def _brute(edge_list, n_nodes):
 
 def test_chain_graph_matches(spark):
     """A 40-node chain: diameter 39 — the label-propagation worst
-    case; both methods must still agree (and with the union-find
-    ground truth)."""
+    case; it must still match the union-find ground truth."""
     edge_list = [(i, i + 1) for i in range(39)]
-    lp, star = _both(spark, edge_list, 40)
-    want = _brute(edge_list, 40)
-    assert lp == want
-    assert star == want
+    assert _lp(spark, edge_list, 40) == _brute(edge_list, 40)
 
 
 def test_random_graphs_match(spark):
@@ -74,13 +60,13 @@ def test_random_graphs_match(spark):
         ]
         # adversarial extras: self-loops and duplicates
         edge_list += [(5, 5), (0, 1), (0, 1)]
-        lp, star = _both(spark, edge_list, n)
         want = _brute(edge_list, n)
-        assert lp == want, f"trial {trial}: label propagation wrong"
-        assert star == want, f"trial {trial}: star method wrong"
+        assert _lp(spark, edge_list, n) == want, (
+            f"trial {trial}: label propagation wrong"
+        )
 
 
-def test_star_handles_isolated_nodes(spark):
-    lp, star = _both(spark, [(1, 2)], 5)
-    assert star == {(0, 0), (1, 1), (2, 1), (3, 3), (4, 4)}
-    assert lp == star
+def test_isolated_nodes(spark):
+    lp = _lp(spark, [(1, 2)], 5)
+    assert lp == {(0, 0), (1, 1), (2, 1), (3, 3), (4, 4)}
+    assert lp == _brute([(1, 2)], 5)

@@ -262,13 +262,11 @@ def test_container_guards_catch_a_deliberate_array(spark):
 #
 # `.collect()` / `.toPandas()` pulls data onto the driver: at 100 TB
 # that is either an OOM or a hidden serial loop. The ONLY admissible
-# use is a bounded scalar — today that is exactly one site: the
-# connected-components convergence check (one row per iteration,
-# operators/dedup.py). New sites must be argued into this whitelist,
-# not slipped in beside it.
-_COLLECT_WHITELIST = {
-    "operators/dedup.py": 1,  # CC convergence scalar (one-row agg)
-}
+# use is a bounded scalar, and today there is none: the one site, the
+# large-star connected-components convergence check, went with that
+# operator. New sites must be argued into this whitelist, not slipped
+# in beside it.
+_COLLECT_WHITELIST: dict[str, int] = {}
 
 
 def test_no_stray_driver_collect():

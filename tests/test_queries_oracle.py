@@ -8,9 +8,8 @@ Spark's scheduler interleaves the concurrent actions across its local
 cores, and every DuckDB run owns a private connection. Each
 parametrized test then just asserts its own query's precomputed
 verdict, keeping per-query failure isolation. Memoizing plan builders
-(plans/clustering, plans/similarity, plans/ticker) guard their memo
-dicts per (application, sf_dir) key insertion, which is atomic under
-the GIL; a rare duplicate build is wasted work, not a wrong answer.
+share one session registry (``session.memo``): concurrent misses on a
+key each build, one build wins and every loser is released.
 """
 
 from __future__ import annotations

@@ -34,21 +34,21 @@ SYNC_BUILD_STAGES = 79
 _CHILD = r"""
 import json, sys
 sys.path.insert(0, sys.argv[1])
+from psx_data_pipeline_spark import session
 from psx_data_pipeline_spark.plans import QUERIES, clear_session_memos
-from psx_data_pipeline_spark.plans import ticker
-from psx_data_pipeline_spark.session import get_spark
-spark = get_spark("sync-counters")
+spark = session.get_spark("sync-counters")
 sc, sf = spark.sparkContext, sys.argv[2]
 clear_session_memos()
 sc.setJobGroup("ticker_sync_changes", "counter guard")
 QUERIES["ticker_sync_changes"](spark, sf)
 st = sc.statusTracker()
 jobs = st.getJobIdsForGroup("ticker_sync_changes")
-memos = [ticker._RESIDUAL_CACHE, ticker._RENAME_CACHE, ticker._SYNC_CHANGE_CACHE]
+memos = ("churn_residuals", "rename_table", "sync_changes")
 facts = {
     "jobs": len(jobs),
     "stages": sum(len(st.getJobInfo(j).stageIds) for j in jobs),
-    "memo_sizes": [len(m) for m in memos],
+    "memo_sizes": [sum(k[0] == m for k in session._MEMOS) for m in memos],
+    "memo_total": len(session._MEMOS),
     "persisted": sc._jsc.getPersistentRDDs().size(),
 }
 clear_session_memos()
@@ -74,9 +74,10 @@ def test_sync_build_jobs_and_memo_lifetime(tmp_path):
         f"ticker_sync_changes build ran {got['jobs']} jobs / {got['stages']} "
         f"stages, pinned {SYNC_BUILD_JOBS} / {SYNC_BUILD_STAGES}"
     )
-    # residuals, rename table, change table: one entry each, and
-    # nothing else persisted
+    # residuals, rename table, change table: one registry entry each,
+    # and nothing else memoized or persisted
     assert got["memo_sizes"] == [1, 1, 1]
+    assert got["memo_total"] == 3
     assert got["persisted"] == 3
     assert got["persisted_after_clear"] == 0
     assert got["cache_manager_empty"]
