@@ -5,9 +5,12 @@ bench total swings 210-292 s between windows, so a single wall is
 meaningless — every A/B must interleave runs of both code versions
 within the same time window and judge on min-of-N. This tool runs one
 fresh process per (side, rep): each process starts its own Spark
-session, warms the fixture files + codegen, clears session memos, and
-times each query twice (min-of-two, the bench's own >1 s policy).
-Sides alternate A,B,A,B,... so a box-load drift hits both equally.
+session, runs tools/query_profile.py's warm-up and times each query
+twice with its run loop (min-of-two, the bench's own >1 s policy; a
+memo owner's memos are cleared before each run). Both sides run this
+checkout's loop on their own engine. The side that runs first swaps
+on every rep (new,old, old,new, ...) so neither box-load drift nor
+going first favours one side.
 
 Usage:
     python tools/ab_query.py --old <worktree-or-repo-dir> --reps 5 \
@@ -25,36 +28,21 @@ import os
 import subprocess
 import sys
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_TOOLS = os.path.dirname(os.path.abspath(__file__))
+_ROOT = os.path.dirname(_TOOLS)
 
 _CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, sys.argv[1])
+import json, os, sys
+sys.path[:0] = [sys.argv[1], sys.argv[2]]
 os.chdir(sys.argv[1])
-names = json.loads(sys.argv[2])
-from psx_data_pipeline_spark.plans import QUERIES, MEMO_OWNERS, clear_session_memos
+names = json.loads(sys.argv[3])
+from query_profile import run_query, warm_up
 from psx_data_pipeline_spark.session import get_spark
+from psx_data_pipeline_spark.sources.fixtures import DEFAULT_SF_DIR
 spark = get_spark("ab_query")
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-from psx_data_pipeline_spark.schemas import FIXTURE_TABLES
-for t in FIXTURE_TABLES:
-    spark.read.parquet(f"{SF_DIR}/{t}.parquet").write.format("noop").mode("overwrite").save()
-# codegen warm-up on the first registered query (bench.py's policy)
-first = next(iter(QUERIES))
-try:
-    QUERIES[first](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-except Exception:
-    pass
-out = {}
-for name in names:
-    best = None
-    for _ in range(2):
-        clear_session_memos()
-        t0 = time.perf_counter()
-        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    out[name] = round(best, 3)
+warm_up(spark, DEFAULT_SF_DIR)
+out = {n: round(min(run_query(spark, n, DEFAULT_SF_DIR)[1] for _ in range(2)), 3)
+       for n in names}
 print("ABRESULT " + json.dumps(out), flush=True)
 """
 
@@ -63,7 +51,7 @@ def run_side(root: str, names: list[str]) -> dict[str, float]:
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)
     p = subprocess.run(
-        [sys.executable, "-c", _CHILD, root, json.dumps(names)],
+        [sys.executable, "-c", _CHILD, root, _TOOLS, json.dumps(names)],
         capture_output=True, text=True, timeout=1200, env=env,
     )
     for line in p.stdout.splitlines():
@@ -83,7 +71,8 @@ def main() -> int:
     mins: dict[str, dict[str, float]] = {"new": {}, "old": {}}
     alls: dict[str, dict[str, list[float]]] = {"new": {}, "old": {}}
     for rep in range(args.reps):
-        for side, root in (("new", _ROOT), ("old", args.old)):
+        sides = [("new", _ROOT), ("old", args.old)]
+        for side, root in sides[::-1] if rep % 2 else sides:
             res = run_side(root, args.names)
             for n, t in res.items():
                 alls[side].setdefault(n, []).append(t)

@@ -5,16 +5,18 @@ irreducible AvailableNow machinery, count what one run actually does —
 micro-batches executed, state-store commits, jobs/stages/tasks, and
 where the wall goes (stream start → first progress → termination).
 
-For each named twin this runs the registered query once warm (after a
-fixture + codegen warm-up), then reads:
-  * the StreamingQuery's recentProgress (batches, state rows,
+The run loop is ``query_profile.py``'s: the session warm-up, then for
+each named twin one unmeasured run and one measured run. For the
+measured run it reads:
+  * the StreamingQuery's progress events (batches, state rows,
     state commit counts, durationMs breakdown),
-  * the job-group census from the status tracker (same method as
-    tools/stage_profile.py).
+  * the jobs, stages and tasks submitted during the run, from the
+    status store (``perfbench/layers.status_store``).
 
 Because the stream queries create + drop their own StreamingQuery
 inside the plan function, progress is captured via a streams listener
-registered before the run.
+registered before the run; the listener bus is drained before the
+events are read.
 
 Usage: python tools/stream_census.py [stream_query ...]
 """
@@ -22,16 +24,16 @@ Usage: python tools/stream_census.py [stream_query ...]
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from query_profile import ROOT, run_query, warm_up
 
-from psx_data_pipeline_spark.plans import QUERIES  # noqa: E402
+sys.path.insert(0, ROOT)
+
+from perfbench.layers import status_store  # noqa: E402
 from psx_data_pipeline_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from psx_data_pipeline_spark.sources.fixtures import DEFAULT_SF_DIR  # noqa: E402
 
 DEFAULT = [
     "stream_click_attribution", "stream_user_totals",
@@ -79,43 +81,18 @@ def main() -> int:
             progress_log.append({"event": "terminated", "t": time.perf_counter()})
 
     spark.streams.addListener(L())
+    warm_up(spark, DEFAULT_SF_DIR)
 
-    from psx_data_pipeline_spark.schemas import FIXTURE_TABLES
-
-    for t in FIXTURE_TABLES:
-        spark.read.parquet(f"{SF_DIR}/{t}.parquet").write.format(
-            "noop"
-        ).mode("overwrite").save()
-
-    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
     for name in names:
-        if name not in QUERIES:
-            print(json.dumps({"query": name, "err": "unknown"}))
-            continue
-        # one warm run (codegen/JIT) — not censused
-        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        time.sleep(1.5)  # listener events arrive async — let them drain
+        run_query(spark, name, DEFAULT_SF_DIR)  # warm run (codegen/JIT), not censused
+        bus.waitUntilEmpty()
         progress_log.clear()
-        group = f"census-{name}"
-        sc.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        sc.setJobGroup(None, None)
-        # listener events arrive async; give the bus a moment
-        time.sleep(1.0)
-        job_ids = sorted(tracker.getJobIdsForGroup(group))
-        stage_ids: set[int] = set()
-        n_tasks = 0
-        for jid in job_ids:
-            jinfo = tracker.getJobInfo(jid)
-            if jinfo is not None:
-                stage_ids.update(jinfo.stageIds)
-        for sid in stage_ids:
-            sinfo = tracker.getStageInfo(sid)
-            if sinfo is not None:
-                n_tasks += sinfo.numCompletedTasks
+        t_start, t0 = time.time(), time.perf_counter()
+        _, wall = run_query(spark, name, DEFAULT_SF_DIR)
+        t_end = time.time()
+        bus.waitUntilEmpty()
+        _, census = status_store(spark, t_start, t_end, sc.defaultParallelism)
         events = list(progress_log)
         batches = [e for e in events if e["event"] == "progress"]
         started = [e for e in events if e["event"] == "started"]
@@ -130,7 +107,8 @@ def main() -> int:
             timeline["post_stream_s"] = round(t0 + wall - ended[-1]["t"], 3)
         print(json.dumps({
             "query": name, "wall_s": round(wall, 3),
-            "jobs": len(job_ids), "stages": len(stage_ids), "tasks": n_tasks,
+            "jobs": census["spark.jobs"], "stages": census["spark.stages"],
+            "tasks": census["spark.tasks"],
             "n_micro_batches": len(batches),
             "batches": [
                 {k: b[k] for k in ("batchId", "numInputRows", "durationMs",
