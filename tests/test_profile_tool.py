@@ -5,7 +5,9 @@ and configured as the tool configures it (``session.get_spark``, UI
 disabled): each query's record must carry every per-layer field,
 repeat its deterministic counters exactly across two measured runs,
 and count the build once (``plans.build_s`` is part of ``wall_s``,
-not added to it). The ticker sync's eager build jobs must match the
+not added to it). Plan time is that of the measured write, so it fits
+inside the run's wall even for a query that returns a memo planned by
+an earlier run. The ticker sync's eager build jobs must match the
 count ``test_sync_counters`` pins through the status tracker.
 """
 
@@ -35,16 +37,19 @@ FIELDS = (
 # fixed by code, data and core count, so equal on every warm repeat
 COUNTERS = ("spark.jobs", "spark.stages", "spark.tasks", "spark.shuffle_write_bytes",
             "plans.py4j_calls")
-QUERIES = ("ticker_sync_changes", "pricing_summary")
+# rename_detection reads the rename memo an earlier run built: its plan
+# time must still be its own write's
+QUERIES = ("ticker_sync_changes", "pricing_summary", "rename_detection")
 
 _CHILD = r"""
 import json, sys
 sys.path[:0] = [sys.argv[1], sys.argv[2]]
 import query_profile as qp
-spark, tracer = qp.traced_session()
+spark, tracer, last = qp.traced_session()
 sf, names = sys.argv[3], json.loads(sys.argv[4])
 qp.warm_up(spark, sf)
-records = {n: [qp.profile_query(spark, tracer, n, sf) for _ in range(2)] for n in names}
+records = {n: [qp.profile_query(spark, tracer, last, n, sf) for _ in range(2)]
+           for n in names}
 out = {"ui": spark.conf.get("spark.ui.enabled"), "records": records}
 print("PROFILED " + json.dumps(out), flush=True)
 spark.stop()
@@ -70,6 +75,7 @@ def test_profile_records_are_complete_and_repeat(tmp_path):
         for rec in (first, second):
             assert set(rec) == set(FIELDS), name
             assert rec["plans.build_s"] <= rec["wall_s"], name
+            assert rec["spark.plan_s"] <= rec["wall_s"], name
         assert {k: first[k] for k in COUNTERS} == {k: second[k] for k in COUNTERS}, name
 
 

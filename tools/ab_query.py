@@ -6,11 +6,12 @@ meaningless — every A/B must interleave runs of both code versions
 within the same time window and judge on min-of-N. This tool runs one
 fresh process per (side, rep): each process starts its own Spark
 session, runs tools/query_profile.py's warm-up and times each query
-twice with its run loop (min-of-two, the bench's own >1 s policy; a
-memo owner's memos are cleared before each run). Both sides run this
-checkout's loop on their own engine. The side that runs first swaps
-on every rep (new,old, old,new, ...) so neither box-load drift nor
-going first favours one side.
+twice with its run loop (min-of-two, the bench's own >1 s policy).
+Every timed run starts with the session memos cleared, so a memo
+consumer rebuilds the memo it reads and both runs are cold. Both sides
+run this checkout's loop on their own engine. The side that runs first
+swaps on every rep (new,old, old,new, ...) so neither box-load drift
+nor going first favours one side.
 
 Usage:
     python tools/ab_query.py --old <worktree-or-repo-dir> --reps 5 \
@@ -37,12 +38,15 @@ sys.path[:0] = [sys.argv[1], sys.argv[2]]
 os.chdir(sys.argv[1])
 names = json.loads(sys.argv[3])
 from query_profile import run_query, warm_up
+from psx_data_pipeline_spark.plans import clear_session_memos
 from psx_data_pipeline_spark.session import get_spark
 from psx_data_pipeline_spark.sources.fixtures import DEFAULT_SF_DIR
 spark = get_spark("ab_query")
 warm_up(spark, DEFAULT_SF_DIR)
-out = {n: round(min(run_query(spark, n, DEFAULT_SF_DIR)[1] for _ in range(2)), 3)
-       for n in names}
+def cold(name):
+    clear_session_memos()
+    return run_query(spark, name, DEFAULT_SF_DIR)
+out = {n: round(min(cold(n) for _ in range(2)), 3) for n in names}
 print("ABRESULT " + json.dumps(out), flush=True)
 """
 

@@ -89,7 +89,7 @@ def main() -> int:
         bus.waitUntilEmpty()
         progress_log.clear()
         t_start, t0 = time.time(), time.perf_counter()
-        _, wall = run_query(spark, name, DEFAULT_SF_DIR)
+        wall = run_query(spark, name, DEFAULT_SF_DIR)
         t_end = time.time()
         bus.waitUntilEmpty()
         _, census = status_store(spark, t_start, t_end, sc.defaultParallelism)
